@@ -150,9 +150,13 @@ object Bench {
     // r15 item 7): the harness reads a ~2 KB tail of stdout where one
     // stray WARN after the JSON truncates it mid-object (r14's artifact
     // recorded parsed:null); BENCH_LINE.json is immune to log framing.
-    // Subset runs write it too — the line itself says full:null.
-    java.nio.file.Files.writeString(
+    // Subset runs write it too — the line itself says full:null. A
+    // failed write is logged and must not suppress the stdout line.
+    try java.nio.file.Files.writeString(
       java.nio.file.Paths.get("BENCH_LINE.json"), line + "\n")
+    catch { case e: java.io.IOException =>
+      System.err.println(s"[bench] BENCH_LINE.json not written: $e")
+    }
     println(line)
   }
 }

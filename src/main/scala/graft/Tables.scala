@@ -17,10 +17,12 @@ object Tables {
   def table(spark: SparkSession, dir: String, name: String): DataFrame =
     spark.read.parquet(s"$dir/$name.parquet")
 
-  /** All graft sessions must read nanosecond parquet timestamps
-    * (events.ts) as raw longs instead of erroring (PARQUET_TYPE_ILLEGAL);
-    * [[events]] then rescales to a proper µs TimestampType. Applied by
-    * Verify/Bench/test builders via this helper. */
+  /** The confs every graft session runs with, in one declaration.
+    * [[Verify.start]] applies them to every session it builds: the
+    * mains' (Verify, Bench, Profile, ScaleProbe, Explain) and the test
+    * suites'. Among them: read nanosecond parquet timestamps (events.ts)
+    * as raw longs instead of erroring (PARQUET_TYPE_ILLEGAL); [[events]]
+    * then rescales to a proper µs TimestampType. */
   val requiredConfs: Map[String, String] = Map(
     "spark.sql.legacy.parquet.nanosAsLong" -> "true",
     "spark.sql.adaptive.enabled" -> "true",
@@ -38,7 +40,33 @@ object Tables {
     // plain `a.join(b, k).orderBy(k)` must never crash).
     "spark.sql.sources.v2.bucketing.enabled" -> "true",
     "spark.sql.sources.v2.bucketing.pushPartValues.enabled" -> "true",
-    "spark.sql.sources.v2.bucketing.sorting.enabled" -> "false")
+    "spark.sql.sources.v2.bucketing.sorting.enabled" -> "false",
+    // Sessions share generated code (SCALE.md, "Sessions share
+    // generated code"). Spark's CodeGenerator.cache is keyed by
+    // (context class loader, source). With artifact isolation on (the
+    // default), every session's jobs carry their own JobArtifactState,
+    // so task-side compiles run under a per-session class loader and a
+    // `newSession()` misses the cache for every stage it runs, although
+    // the library never adds a session artifact (jars, classes, files).
+    // Off, every session compiles under the JVM's loaders and a stage
+    // the JVM has already run is a cache hit. CodegenReuseSpec pins it.
+    "spark.sql.artifact.isolation.enabled" -> "false",
+    // The cache key is the class's source, and by default the class is
+    // named after its whole-stage codegen stage id. AQE numbers stages
+    // as it re-plans, and how often it re-plans depends on the order in
+    // which query stages finish, so the same stage can get another id,
+    // and thus another class, from one run to the next (2 of
+    // q_x_basket_lift's classes missed on every session). Unnamed, the
+    // same stage is the same source and hits.
+    "spark.sql.codegen.useIdInClassName" -> "false",
+    // The cache's capacity (default 100) is a static conf: CodeGenerator
+    // reads it once, from the session active when it first compiles.
+    // That is the first session of the JVM, which Verify.start builds
+    // for the mains and the test suites alike. 100 entries evict part of
+    // one benchmark pass's working set before the next pass (about 20
+    // compiles a curation pass in some JVMs); 200 is the smallest round
+    // size that leaves none (measurements in SCALE.md).
+    "spark.sql.codegen.cache.maxEntries" -> "200")
 
   def region(s: SparkSession, d: String): DataFrame    = table(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame    = table(s, d, "nation")
@@ -84,7 +112,15 @@ object Tables {
     * predicate is false, and NO shuffle is added — this must never
     * become an unconditional repartition, which would re-shuffle the
     * full input at 100 TB. Apply AFTER projecting to the needed columns
-    * so the exchange moves only what the operator reads. */
+    * so the exchange moves only what the operator reads.
+    *
+    * Caller contract: pass only a scan/project frame, with no exchange
+    * (join, aggregate, sort, repartition) or subquery below it. AQE wraps
+    * any plan that has one, and such a plan is returned UNTOUCHED, even
+    * when AQE will coalesce its last shuffle to a single partition at run
+    * time: reading the post-shuffle partition count would run the
+    * upstream stages at plan-build time, so it cannot be checked here.
+    * A caller that fans out shuffled rows must repartition them itself. */
   def fanOut(df: DataFrame): DataFrame = {
     val target = df.sparkSession.sparkContext.defaultParallelism
     df.queryExecution.executedPlan match {

@@ -6,43 +6,53 @@ import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
-  /** Session builder shared by Verify/Bench: local[N], N shuffle
-    * partitions (not 200 — local mode has N cores), AQE on, UTC, and the
-    * nanos-parquet read conf (Tables.requiredConfs). */
+  /** The session of the mains (Verify, Bench, Profile, ScaleProbe,
+    * Explain): [[start]] with `SPARK_GRAFT_CPUS` cores (default 4) and a
+    * warehouse dir of its own. */
   def session(appName: String): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    // Dev-only A/B hook: semicolon-separated k=v pairs layered on top of
+    // the standard session confs, so optimization experiments can flip
+    // one conf without a code edit (the driver never sets this).
+    val extra = sys.env.get("SPARK_GRAFT_EXTRA_CONF").toSeq.flatMap { s =>
+      // Loud marker (ADVICE r15): any artifact produced under a layered
+      // conf must be identifiable as non-standard.
+      Console.err.println(s"[graft] WARNING: SPARK_GRAFT_EXTRA_CONF overrides active: $s")
+      s.split(';').filter(_.contains('=')).map { kv =>
+        val Array(k, v) = kv.split("=", 2)
+        k.trim -> v.trim
+      }
+    }
+    // pid+nanoTime-unique: a managed table's directory outlives the
+    // in-memory catalog, so a reused location fails the next JVM's
+    // saveAsTable — and pids RECYCLE on a long-lived host (each
+    // 32-thread Spark JVM burns thousands of Linux pids, so a session
+    // running many forked mains wraps pid_max and collides; observed
+    // round 8: LOCATION_ALREADY_EXISTS on graft-warehouse-865).
+    start(appName, sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"),
+      s"${sys.props("java.io.tmpdir")}/graft-warehouse-" +
+        s"${ProcessHandle.current().pid()}-${java.lang.System.nanoTime()}",
+      extra)
+  }
+
+  /** Builds (or returns the JVM's existing) graft session: local[cores],
+    * `cores` shuffle partitions (not 200 — local mode has that many
+    * cores), the library's extensions, no UI, WARN logs, and
+    * [[Tables.requiredConfs]], then `extra` on top. The mains and the
+    * test suites both start here, so their sessions cannot drift apart. */
+  def start(appName: String, cores: String, warehouseDir: String,
+            extra: Seq[(String, String)] = Nil): SparkSession = {
     val b = SparkSession.builder()
       .appName(appName)
-      .master(s"local[$cpus]")
+      .master(s"local[$cores]")
       // The library's custom Expressions (dotp/poly31/shingles3) via the
       // standard extensions hook — how a cluster deployment would load
       // them; operators also self-register for foreign sessions.
       .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.shuffle.partitions", cores)
       .config("spark.ui.enabled", "false")
       .config("spark.log.level", "WARN")
-      // pid+nanoTime-unique: a managed table's directory outlives the
-      // in-memory catalog, so a reused location fails the next JVM's
-      // saveAsTable — and pids RECYCLE on a long-lived host (each
-      // 32-thread Spark JVM burns thousands of Linux pids, so a session
-      // running many forked mains wraps pid_max and collides; observed
-      // round 8: LOCATION_ALREADY_EXISTS on graft-warehouse-865).
-      .config("spark.sql.warehouse.dir",
-        s"${sys.props("java.io.tmpdir")}/graft-warehouse-" +
-          s"${ProcessHandle.current().pid()}-${java.lang.System.nanoTime()}")
-    Tables.requiredConfs.foreach { case (k, v) => b.config(k, v) }
-    // Dev-only A/B hook: semicolon-separated k=v pairs layered on top of
-    // the standard session confs, so optimization experiments can flip
-    // one conf without a code edit (the driver never sets this).
-    sys.env.get("SPARK_GRAFT_EXTRA_CONF").foreach { s =>
-      // Loud marker (ADVICE r15): any artifact produced under a layered
-      // conf must be identifiable as non-standard.
-      Console.err.println(s"[graft] WARNING: SPARK_GRAFT_EXTRA_CONF overrides active: $s")
-      s.split(';').filter(_.contains('=')).foreach { kv =>
-        val Array(k, v) = kv.split("=", 2)
-        b.config(k.trim, v.trim)
-      }
-    }
+      .config("spark.sql.warehouse.dir", warehouseDir)
+    (Tables.requiredConfs ++ extra).foreach { case (k, v) => b.config(k, v) }
     val spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark

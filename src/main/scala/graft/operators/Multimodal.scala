@@ -666,29 +666,35 @@ object Multimodal {
       val out = new java.io.ByteArrayOutputStream()
       val ios = new javax.imageio.stream.MemoryCacheImageOutputStream(out)
       val writer = gifWriterTl.get()
-      writer.setOutput(ios)
-      writer.prepareWriteSequence(null)
-      var f = 0
-      val n = nFramesOf(docId)
-      while (f < n) {
-        val img = new java.awt.image.BufferedImage(
-          w, h, java.awt.image.BufferedImage.TYPE_BYTE_INDEXED, grayPalette)
-        val raster = img.getRaster
-        var y = 0
-        while (y < h) {
-          var x = 0
-          while (x < w) {
-            raster.setSample(x, y, 0, grayAt(docId, f, x, y))
-            x += 1
+      // try/finally, as in decodeVideoFrames: a sequence that fails
+      // midway must not leave this thread's writer holding the dead
+      // stream for the next task the executor thread runs.
+      try {
+        writer.setOutput(ios)
+        writer.prepareWriteSequence(null)
+        var f = 0
+        val n = nFramesOf(docId)
+        while (f < n) {
+          val img = new java.awt.image.BufferedImage(
+            w, h, java.awt.image.BufferedImage.TYPE_BYTE_INDEXED, grayPalette)
+          val raster = img.getRaster
+          var y = 0
+          while (y < h) {
+            var x = 0
+            while (x < w) {
+              raster.setSample(x, y, 0, grayAt(docId, f, x, y))
+              x += 1
+            }
+            y += 1
           }
-          y += 1
+          writer.writeToSequence(new javax.imageio.IIOImage(img, null, null), null)
+          f += 1
         }
-        writer.writeToSequence(new javax.imageio.IIOImage(img, null, null), null)
-        f += 1
+        writer.endWriteSequence()
+      } finally {
+        writer.setOutput(null)
+        ios.close()
       }
-      writer.endWriteSequence()
-      writer.setOutput(null)
-      ios.close()
       out.toByteArray
     }
   }

@@ -49,6 +49,29 @@ class PlanHygieneSpec extends AnyFunSuite {
       "fanOut touched an adaptive (exchange-bearing) plan")
   }
 
+  test("embedding index: one tail count() fills both the bands and the vectors cache") {
+    import graft.operators.Dedup
+    val cm = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager
+    // Every partition of the frame's cached RDD is stored. The builders
+    // run one `bands.count()` and rely on it to fill `e` as well, since
+    // `bands` is computed from `e`'s cache (Dedup.buildEmbeddingIndex).
+    def filled(df: org.apache.spark.sql.DataFrame): Boolean =
+      cm.lookupCachedData(df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]])
+        .exists(_.cachedRepresentation.cacheBuilder.isCachedColumnBuffersLoaded)
+    val emb = Tables.embeddings(spark, d)
+    val dim = emb.select(size(col("embedding"))).head().getInt(0)
+    var index = Dedup.buildEmbeddingIndex(emb.filter(col("vec_id") % 2 === 0), dim)
+    try {
+      assert(filled(index.bands), "buildEmbeddingIndex left the bands cache unfilled")
+      assert(filled(index.vectors), "buildEmbeddingIndex left the vectors cache unfilled")
+      index = Dedup.absorbIntoEmbeddingIndex(index, emb.filter(col("vec_id") % 2 === 1))
+      val Seq(_, _, bands, vectors) = index.cached
+      assert(filled(bands), "absorbIntoEmbeddingIndex left the new bands cache unfilled")
+      assert(filled(vectors), "absorbIntoEmbeddingIndex left the new vectors cache unfilled")
+    } finally Dedup.releaseEmbeddingIndex(index)
+  }
+
   test("q_x_groupby_q1: shipdate predicate is pushed to the scan, columns pruned") {
     val scans = plan("q_x_groupby_q1").collect { case f: FileSourceScanExec => f }
     assert(scans.nonEmpty, "expected a parquet FileSourceScan")

@@ -7,19 +7,6 @@ import org.apache.spark.sql.SparkSession
 object TestSpark {
   val sf0001 = "/root/testdata/sf0.001"
 
-  lazy val spark: SparkSession = {
-    val b = SparkSession.builder()
-      .appName("graft-test")
-      .master("local[4]")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .config("spark.log.level", "WARN")
-      .config("spark.sql.warehouse.dir",
-        s"${sys.props("java.io.tmpdir")}/graft-test-warehouse-${ProcessHandle.current().pid()}")
-    Tables.requiredConfs.foreach { case (k, v) => b.config(k, v) }
-    val s = b.getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = Verify.start("graft-test", "4",
+    s"${sys.props("java.io.tmpdir")}/graft-test-warehouse-${ProcessHandle.current().pid()}")
 }
